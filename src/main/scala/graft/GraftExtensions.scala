@@ -10,13 +10,19 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType}
 
 import graft.plans.{DotProduct, MaxMultiplicity, MinHashSignature, NearestCenter, NearestCenters, NGramMaxMultiplicity, SimHash64}
 
-/** SparkSessionExtensions entry point: registers this engine's native
-  * Catalyst expressions as SQL functions. Usable two ways:
+/** The SQL-text surface of this engine's native Catalyst expressions:
+  * registers them as `graft_*` SQL functions and adds the
+  * [[graft.plans.DotProductRewrite]] optimizer rule, for users who write
+  * SQL strings. Usable two ways:
   *
   *   - config: `spark.sql.extensions=graft.GraftExtensions`
-  *   - runtime: `GraftExtensions.register(spark)` (idempotent) for
-  *     sessions the caller doesn't configure — how the driver-contract
-  *     queries attach to the provided session.
+  *   - runtime: `GraftExtensions.register(spark)` (idempotent) on a
+  *     session the caller already owns.
+  *
+  * The library's own operators never go through it: they build each
+  * expression directly with the typed builders in `graft.functions`
+  * (`TextFunctions.minhash`, `VectorFunctions.dot`, …), so they run on
+  * any session and leave its function registry and optimizer alone.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

@@ -2,9 +2,11 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Text primitives for the training-data pipeline operators, built
-  * entirely from codegen'd Spark built-ins (no UDFs — SURVEY.md §2.F
+  * from codegen'd Spark built-ins and typed builders for this engine's
+  * native Catalyst expressions (graft.plans) — no UDFs (SURVEY.md §2.F
   * notes the reference needs zero UDFs; we keep that property even for
   * the ops we add beyond the reference).
   */
@@ -77,13 +79,11 @@ object TextFunctions {
     if (fast) xxhash64(s)
     else md5w60(s)
 
-  // direct expression construction (no FunctionRegistry dependence —
-  // baseHash/shingleKey run inside operators that may not have called
-  // GraftExtensions.register on the session)
-  private def md5w60(s: Column): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+  // Native expressions are built directly (ColumnBridge), never looked
+  // up by SQL name: operators work on any session, and the caller's
+  // function registry is left alone.
+  private def md5w60(s: Column): Column =
     ColumnBridge.column(graft.plans.Md5Word60(ColumnBridge.expression(s)))
-  }
 
   /** Positional shingle keys — element i = shingleKey of the k-token
     * window at position i, as ONE native array<long>
@@ -92,22 +92,9 @@ object TextFunctions {
     * interpreted per-position concat_ws lambda or the intermediate
     * shingle strings (differential-spec'd). The span-posting hot path;
     * < k tokens → empty array. */
-  def positionalShingleKeys(tok: Column, k: Int, fast: Boolean = false): Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
+  def positionalShingleKeys(tok: Column, k: Int, fast: Boolean = false): Column =
     ColumnBridge.column(graft.plans.SpanKeys(ColumnBridge.expression(tok), k, fast))
-  }
 
-  /** MinHash signature: `k` independent min-hashes over `shingleArr`.
-    * Component i is min over shingles of universal-hash_i(baseHash(shingle)).
-    *
-    * Shaped as ONE `aggregate` over the shingle array (element-wise min
-    * of per-shingle hash vectors) rather than `transform(0..k-1, i =>
-    * array_min(...))`: higher-order functions are interpreted (no
-    * codegen/CSE), so in the transform-outside shape Catalyst's
-    * CollapseProject inlines the shingle-building expression into the
-    * outer lambda and it is re-evaluated k times per row — measured 64×
-    * slowdown at sf0.1. With the array as the aggregate *input* it is
-    * evaluated exactly once per row. Still zero shuffles. */
   /** k universal-hash coefficient pairs (fixed seed → identical on every
     * executor and embeddable as oracle-SQL literals); h_i = (a_i*h + b_i)
     * mod P with h,a,b < P, so products stay < 2^62 (no ANSI overflow)
@@ -121,18 +108,47 @@ object TextFunctions {
     (a, b)
   }
 
-  def minhashSignature(shingleArr: Column, k: Int, fast: Boolean = false): Column = {
-    val (coefA, coefB) = minhashCoefficients(k)
-    val aLit = array(coefA.map(lit): _*)
-    val bLit = array(coefB.map(lit): _*)
-    aggregate(
-      transform(shingleArr, s => baseHash(s, fast)),
-      array_repeat(lit(Long.MaxValue), k),
-      (acc, h) => zip_with(
-        acc,
-        zip_with(aLit, bLit, (a, b) => pmod(a * h + b, lit(P))),
-        (x, y) => least(x, y)))
-  }
+  /** MinHash signature: `k` independent min-hashes over `shingleArr`
+    * (array<string>). Component i is min over shingles of
+    * universal-hash_i(baseHash(shingle, fast)) — the native
+    * plans.MinHashSignature, whose k×n loop compiles into the
+    * surrounding codegen span. */
+  def minhash(shingleArr: Column, k: Int, fast: Boolean = false): Column =
+    ColumnBridge.column(
+      graft.plans.MinHashSignature(ColumnBridge.expression(shingleArr), k, fast))
+
+  /** 64-bit SimHash of a token array packed into one long — the native
+    * plans.SimHash64, bit-identical to
+    * `packBits(simhashBits(tokenArr, 64), 64)`. */
+  def simhash64(tokenArr: Column): Column =
+    ColumnBridge.column(graft.plans.SimHash64(ColumnBridge.expression(tokenArr)))
+
+  /** Count of the most frequent `n`-token window of a token array — the
+    * native plans.NGramMaxMultiplicity. */
+  def maxMultNgram(tokenArr: Column, n: Int): Column =
+    ColumnBridge.column(
+      graft.plans.NGramMaxMultiplicity(ColumnBridge.expression(tokenArr), n))
+
+  /** Banded estimated-Jaccard pair walk over one LSH bucket — the native
+    * plans.JaccardBucketPairs: `ms` is the bucket's
+    * array<struct<doc:long, sig:array<long>>>, `band` its band index,
+    * `r` the band width. `cap` is the hot-bucket guard and `minScore`
+    * a pushed-down score floor; None turns either off. */
+  def jaccardPairs(ms: Column, band: Column, r: Int,
+      cap: Option[Int], minScore: Option[Double]): Column =
+    ColumnBridge.column(graft.plans.JaccardBucketPairs(
+      ColumnBridge.expression(ms), ColumnBridge.expression(band), r,
+      cap.getOrElse(-1), minScore.getOrElse(-1.0)))
+
+  /** [[jaccardPairs]] for packed long signatures, Hamming-scored — the
+    * native plans.PackedBucketPairs over
+    * array<struct<doc:long, sig:long>>; `maxScore` is a pushed-down
+    * Hamming ceiling. */
+  def packedPairs(ms: Column, band: Column, r: Int,
+      cap: Option[Int], maxScore: Option[Int]): Column =
+    ColumnBridge.column(graft.plans.PackedBucketPairs(
+      ColumnBridge.expression(ms), ColumnBridge.expression(band), r,
+      cap.getOrElse(-1), maxScore.getOrElse(-1)))
 
   /** Estimated Jaccard from two equal-length MinHash signatures: the
     * fraction of agreeing components. */

@@ -2,11 +2,13 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
-/** Dense-vector primitives over `array<float|double>` columns, written
-  * as higher-order-function expressions (codegen'd, deterministic
-  * left-to-right accumulation — important for oracle parity and for
-  * reproducibility across partitionings at scale).
+/** Dense-vector primitives over `array<float|double>` columns: Spark
+  * built-ins plus typed builders for this engine's native Catalyst
+  * expressions (graft.plans), all with deterministic left-to-right
+  * accumulation — important for oracle parity and for reproducibility
+  * across partitionings at scale.
   */
 object VectorFunctions {
 
@@ -14,14 +16,15 @@ object VectorFunctions {
   def asDoubles(v: Column): Column = v.cast("array<double>")
 
   /** Dot product via the native codegen'd expression (graft.plans.
-    * DotProduct, registered as `graft_dot`): the d-length loop compiles
-    * to straight Java instead of ~4·d interpreted HOF node evaluations —
-    * this is the inner loop of bucketing, scoring, and assignment, so
-    * every vector operator entry point registers GraftExtensions first.
-    * Accumulation order (sequential left-to-right) is bit-identical to
-    * `dotHof` and to DuckDB's list_dot_product (asserted in spec), so
-    * oracle parity is unchanged. */
-  def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
+    * DotProduct): the d-length loop compiles to straight Java instead of
+    * ~4·d interpreted HOF node evaluations — this is the inner loop of
+    * bucketing, scoring, and assignment. Accumulation order (sequential
+    * left-to-right) is bit-identical to `dotHof` and to DuckDB's
+    * list_dot_product (asserted in spec), so oracle parity is
+    * unchanged. */
+  def dot(a: Column, b: Column): Column =
+    ColumnBridge.column(graft.plans.DotProduct(
+      ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** The HOF formulation — kept as the executable spec of `dot`'s
     * accumulation order. */
@@ -29,6 +32,38 @@ object VectorFunctions {
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
+
+  /** Native visitor×pool cosine scoring with per-visitor top-k
+    * (plans.ScoreTopK): for every visitor in `vs`, its ≤ k best pool
+    * members by (cos DESC, id ASC), self excluded. Both arguments are
+    * array<struct<id:long, v:array<double>, nrm:double, …>>; the output
+    * is array<struct<vec_id, neighbor_id, cos>>. */
+  def scoreTopK(vs: Column, pool: Column, k: Int): Column =
+    ColumnBridge.column(graft.plans.ScoreTopK(
+      ColumnBridge.expression(vs), ColumnBridge.expression(pool), k))
+
+  /** Map-side-bounded top-k aggregate (plans.TopKPairsAgg) over
+    * (score: double, id: long) → array<struct<cos, neighbor_id>>,
+    * strongest first, exact duplicates collapsed — for
+    * `groupBy(...).agg(...)`. */
+  def topK(score: Column, id: Column, k: Int): Column =
+    ColumnBridge.column(graft.plans.TopKPairsAgg(
+      ColumnBridge.expression(score), ColumnBridge.expression(id), k)
+      .toAggregateExpression())
+
+  /** Id of the nearest centroid to `v` by L2 (plans.NearestCenter):
+    * the centroid matrix rides as ONE plan object, so plan size is O(1)
+    * in the centroid count. `cids` must ascend (the tie-break order). */
+  def nearestCenter(v: Column, centers: Array[Array[Double]], cids: Array[Long]): Column =
+    ColumnBridge.column(
+      graft.plans.NearestCenter(ColumnBridge.expression(v), centers, cids))
+
+  /** Ids of the `p` best centroids by inner product, best first
+    * (plans.NearestCenters) — IVF probe-cell selection. */
+  def nearestCenters(v: Column, centers: Array[Array[Double]], cids: Array[Long],
+      p: Int): Column =
+    ColumnBridge.column(
+      graft.plans.NearestCenters(ColumnBridge.expression(v), centers, cids, p))
 
   /** Cross-engine-safe fixed-point rounding: floor(x·10^dp + 0.5)/10^dp.
     * Unlike `round()` — whose half-way semantics differ between Spark

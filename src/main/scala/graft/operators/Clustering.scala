@@ -73,8 +73,7 @@ object Clustering {
       }: _*))
       element_at(cells, 1).getField("cid")
     } else
-      call_function("graft_nearest_center", col("v"),
-        typedLit(cs.map(_._2.toSeq)), typedLit(cs.map(_._1)))
+      nearestCenter(col("v"), cs.map(_._2).toArray, cs.map(_._1).toArray)
 
   /** The trained centroids alone — seed (k lowest-id vectors) + `iters`
     * Lloyd rounds. Shared by kmeansAssign and ivfNeighbors' refined
@@ -84,7 +83,6 @@ object Clustering {
       k: Int = 8, iters: Int = 2, roundDp: Int = 6,
       literalMaxTerms: Int = LiteralAssignMaxTerms): Seq[(Long, Array[Double])] = {
     require(k >= 1 && iters >= 0 && roundDp >= 0)
-    graft.GraftExtensions.register(corpus.sparkSession)
     val e = corpus
       .select(col(idCol).cast("long").as("id"), asDoubles(col(vecCol)).as("v"))
 

@@ -317,160 +317,34 @@ object Dedup {
       .select("train_id", "eval_id", "containment")
   }
 
-  /** Candidate pairs from banded signatures (`doc, sig, band, bkey`):
-    * group each LSH bucket once and enumerate member pairs via an
-    * indexed-lambda explode. This beats the natural self-join on
-    * (band,bkey), which computes the signature plan twice (Spark cannot
-    * reuse the exchange into a broadcast build side) — one pass + one
-    * shuffle instead.
-    *
-    * A pair colliding in SEVERAL bands must still be emitted once.
-    * Rather than a `dropDuplicates` — a second full shuffle of the
-    * candidate set, the largest intermediate in the whole dedup — each
-    * pair is kept only in its FIRST colliding band, decided IN-ROW from
-    * the signatures both members carry: bands `0 until band` must
-    * disagree on their `r`-wide slices. Exact-once by construction, zero
-    * extra exchanges.
-    *
-    * The caller's symmetric `score` (est-Jaccard, Hamming) is computed
-    * IN-ROW inside the pair lambda, so the emitted candidate struct is
-    * (doc_a, doc_b, score, keep) — ~40 bytes — instead of dragging both
-    * full signatures (~1 KB at k=64) through the expansion: the exact
-    * branch's peak per-bucket memory drops ~25× for free.
-    *
-    * Hot-bucket guard (`maxBucket`): a bucket with m > cap members
-    * would otherwise materialize O(m²) candidate structs inside one
-    * aggregation row — the executor-OOM regime when a boilerplate
-    * near-dup cluster (routine in web crawls) lands in one bucket. Above
-    * the cap the bucket switches to survivor-pairs + representative
-    * chains: the `cap` lowest-id members (deterministic and key-stable —
-    * bucket membership alone decides) enumerate pairs exactly, every
-    * remaining member CHAINS to the bucket representative (the min doc).
-    * Per-bucket work becomes O(cap² + m), and connectivity is preserved
-    * — every member stays linked to the rep, so `duplicateClusters`
-    * resolves a capped cluster to exactly the same component. The price
-    * is pair-level completeness among non-survivors, which is the right
-    * trade in the regime that triggers it: a bucket only grows hot when
-    * near-identical documents share band slices, where chain scores
-    * match pair scores.
-    *
-    * Guard/keep interaction, stated precisely: `keep` assumes the FIRST
-    * colliding band represented the pair, so a pair of non-survivors
-    * whose first collision is a hot band exists only through that
-    * band's chains — a later COLD collision of the same pair is still
-    * suppressed by `keep`. If such a pair's chain scores fall below the
-    * caller's threshold, its component can split. This requires a hot
-    * bucket whose members are NOT mutually similar — with md5-derived
-    * r-component slices that is a degenerate banding, not a boilerplate
-    * cluster — and is the irreducible approximation of bounding bucket
-    * work in-row. When NO band bucket exceeds the cap (every gated
-    * fixture; the dormancy spec), results are bit-identical to the
-    * unguarded plan. */
-  private def bucketPairs(
-      banded: DataFrame, r: Int,
-      score: (Column, Column) => Column,
-      maxBucket: Option[Int]): DataFrame = {
-    maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    def bandSlice(sig: Column, b: Column): Column =
-      slice(sig, b * r + 1, lit(r))
-    def pair(x: Column, y: Column): Column = {
-      val keep = when(col("band") === 0, lit(true))
-        .otherwise(forall(
-          // sequence() steps DOWNWARD for an empty range, hence the
-          // band === 0 guard above
-          sequence(lit(0), col("band") - 1),
-          b => !(bandSlice(x.getField("sig"), b) === bandSlice(y.getField("sig"), b))))
-      struct(
-        least(x.getField("doc"), y.getField("doc")).as("doc_a"),
-        greatest(x.getField("doc"), y.getField("doc")).as("doc_b"),
-        score(x.getField("sig"), y.getField("sig")).as("score"),
-        keep.as("keep"))
-    }
-    def allPairs(ms: Column): Column =
-      flatten(transform(ms, (a, i) =>
-        transform(slice(ms, i + 2, size(ms)), b => pair(a, b))))
-    val pairsCol = maxBucket match {
-      case None => allPairs(col("ms"))
-      case Some(cap) =>
-        // struct sort = doc ascending (doc is the first field), so the
-        // survivor set and the representative are order-independent.
-        // `__mss` is a MATERIALIZED projection, not an inline
-        // array_sort: an inline `sorted` re-evaluates at every
-        // reference inside the pair-walk lambdas — a re-SORT of the
-        // whole bucket per chained element, O(m²·log m) on exactly the
-        // hot buckets the cap exists for (measured: the capped walk ran
-        // 2× the UNCAPPED walk on 2.2-2.9k-member buckets, round 16)
-        val sorted = col("__mss")
-        when(size(col("ms")) <= cap, allPairs(col("ms")))
-          .otherwise(concat(
-            allPairs(slice(sorted, 1, cap)),
-            transform(slice(sorted, lit(cap + 1), size(col("ms")) - cap),
-              x => pair(element_at(sorted, 1), x))))
-    }
-    val grouped = banded.groupBy("band", "bkey")
-      .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-    // the sorted image is computed once per OVER-cap bucket (the when()
-    // leaves it null below the cap), so dormant-cap plans pay one size()
-    // test per bucket and results there stay bit-identical
-    val staged = maxBucket match {
-      case None => grouped
-      case Some(cap) => grouped.withColumn("__mss",
-        when(size(col("ms")) > cap, array_sort(col("ms"))))
-    }
-    staged
-      // outer + null-drop: a non-outer explode's inferred filter
-      // (InferFiltersFromGenerate) re-evaluates the whole pair-
-      // enumeration lambda twice more per bucket row (see
-      // ngramJaccardPairs); an all-suppressed bucket's empty array
-      // becomes one null row, dropped here
-      .select(explode_outer(filter(pairsCol, p => p.getField("keep"))).as("p"))
-      .filter(col("p").isNotNull)
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.score").as("score"))
-  }
-
-  /** MinHash + LSH near-duplicate pairs. k-component signatures are cut
-    * into `bands` bands of k/bands rows; documents colliding in any band
-    * become candidates; candidates are scored by signature-estimated
-    * Jaccard. With k=64, bands=16 (r=4) the LSH S-curve crosses ~0.5 —
-    * tuned for finding ≥0.8-similar training-corpus duplicates. */
   /** The banded LSH index rows (`doc, sig, band, bkey`) minhashPairs
     * buckets on — exposed as the occupancy-observability surface (feed
     * to `Occupancy.stats(_, cap, "band", "bkey")` to see the skew regime
-    * the hot-bucket guard would face). */
+    * the hot-bucket guard would face). The signature is the native
+    * [[graft.functions.TextFunctions.minhash]]; `fast` swaps its
+    * md5-derived base hash for xxhash64 (the production mode when no
+    * cross-engine oracle is needed; see TextFunctions.baseHash). */
   def minhashBanded(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands, native: Boolean = true,
+      bands: Int = DefaultMinhashBands,
       fast: Boolean = false): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val r = k / bands
-    // native path: codegen'd Catalyst expression (graft.plans.
-    // MinHashSignature) — bit-identical to the HOF formulation, but the
-    // k×n loop compiles instead of interpreting; registered on demand
-    // via GraftExtensions. `fast` swaps the md5-derived base hash for
-    // xxhash64 (the production mode when no cross-engine oracle is
-    // needed; see TextFunctions.baseHash).
-    val sigCol =
-      if (native) {
-        graft.GraftExtensions.register(df.sparkSession)
-        call_function("graft_minhash", shinglesFromTokens(col("toks"), n), lit(k), lit(fast))
-      } else minhashSignature(shinglesFromTokens(col("toks"), n), k, fast)
     val sig = df
       .select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
       // docs shorter than the shingle width have NO shingles; left in,
       // they would all share the identity signature and spuriously pair
       // with each other at est_jaccard = 1.0
       .filter(size(col("toks")) >= n)
-      .select(col("doc"), sigCol.as("sig"))
+      .select(col("doc"), minhash(shinglesFromTokens(col("toks"), n), k, fast).as("sig"))
     // band keys in one projection: each signature slice rendered as a
     // string (not hashed — the join key must be recomputable by the
     // DuckDB oracle, and the slice itself is exactly as shuffle-compact
     // at r=4 components)
-    // posexplode_OUTER + null-drop (see signatureBanded): a non-outer
-    // generate's inferred filter would substitute the full graft_minhash
-    // expression and re-evaluate it twice more per row
+    // posexplode_OUTER + null-drop (see packedSignatureBanded): a
+    // non-outer generate's inferred filter would substitute the full
+    // signature expression and re-evaluate it twice more per row
     sig.select(
       col("doc"), col("sig"),
       posexplode_outer(transform(sequence(lit(0), lit(bands - 1)), i =>
@@ -479,46 +353,49 @@ object Dedup {
       .filter(col("band").isNotNull)
   }
 
+  /** MinHash + LSH near-duplicate pairs. k-component signatures are cut
+    * into `bands` bands of k/bands rows; documents colliding in any band
+    * become candidates; candidates are scored by signature-estimated
+    * Jaccard. With k=64, bands=16 (r=4) the LSH S-curve crosses ~0.5 —
+    * tuned for finding ≥0.8-similar training-corpus duplicates. Ids
+    * must be longs. */
   def minhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
       bands: Int = DefaultMinhashBands,
-      threshold: Double = DefaultMinhashThreshold, native: Boolean = true,
+      threshold: Double = DefaultMinhashThreshold,
       fast: Boolean = false,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame = {
     require(k % bands == 0, "bands must divide k")
-    val banded = minhashBanded(df, idCol, textCol, n, k, bands, native, fast)
-    jaccardBucketPairs(banded, k / bands, maxBucket, Some(threshold))
+    val banded = minhashBanded(df, idCol, textCol, n, k, bands, fast)
+    // the threshold is also pushed inside the walk, so pairs below it
+    // are never materialized as rows
+    bucketPairs(banded, maxBucket)(
+      jaccardPairs(_, _, k / bands, maxBucket, Some(threshold)))
       .filter(col("score") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("score").as("est_jaccard"))
   }
 
-  /** [[bucketPairs]] with the estimated-Jaccard score, NATIVE when the
-    * banded frame carries (doc: long, sig: array<long>) — the MinHash
-    * production shape (see [[packedBucketPairs]]'s native-walk note;
-    * the HOF walk interprets a zip_with+aggregate tree per candidate
-    * pair). `minScore` pushes the caller's `score >= minScore` filter
-    * inside the walk; emitted pairs are unchanged. Exotic schemas fall
-    * back to the generic HOF walk (then `minScore` is a no-op and the
-    * caller's downstream Filter does the work). */
-  private def jaccardBucketPairs(banded: DataFrame, r: Int,
-      maxBucket: Option[Int], minScore: Option[Double] = None): DataFrame = {
+  /** Candidate pairs from banded signatures (`doc, sig, band, bkey`):
+    * one groupBy over (band, bkey), then the native pair `walk` over
+    * each bucket's (doc, sig) members and band index —
+    * [[graft.functions.TextFunctions.jaccardPairs]] or
+    * [[graft.functions.TextFunctions.packedPairs]], whose
+    * first-colliding-band dedup and hot-bucket cap are documented at
+    * plans.BucketPairsExpr. `doc` must be a long; other types fail
+    * analysis. Output (doc_a, doc_b, score). */
+  private def bucketPairs(banded: DataFrame, maxBucket: Option[Int])(
+      walk: (Column, Column) => Column): DataFrame = {
     maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    import org.apache.spark.sql.types.{ArrayType, LongType}
-    val nativeTypes =
-      banded.schema("doc").dataType == LongType &&
-        (banded.schema("sig").dataType match {
-          case ArrayType(LongType, _) => true
-          case _ => false
-        })
-    if (!nativeTypes) return bucketPairs(banded, r, estJaccard, maxBucket)
-    graft.GraftExtensions.register(banded.sparkSession)
     banded.groupBy("band", "bkey")
       .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
       .filter(size(col("ms")) > 1)
-      .select(explode_outer(call_function("graft_jaccard_pairs",
-        col("ms"), col("band"), lit(r), lit(maxBucket.getOrElse(-1)),
-        lit(minScore.getOrElse(-1.0)))).as("p"))
+      // outer + null-drop: a non-outer explode's inferred filter
+      // (InferFiltersFromGenerate) re-evaluates the walk twice more per
+      // bucket row (see ngramJaccardPairs); an empty pair array (all
+      // pairs suppressed or thresholded) becomes one null row, dropped
+      // here
+      .select(explode_outer(walk(col("ms"), col("band"))).as("p"))
       .filter(col("p").isNotNull)
       .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
         col("p.score").as("score"))
@@ -549,13 +426,13 @@ object Dedup {
       delta: DataFrame, corpus: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
       bands: Int = DefaultMinhashBands,
-      threshold: Double = DefaultMinhashThreshold, native: Boolean = true,
+      threshold: Double = DefaultMinhashThreshold,
       fast: Boolean = false,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
     minhashPairsIncrementalFromIndex(
       delta,
-      minhashBandIndex(corpus, idCol, textCol, n, k, bands, native, fast, maxBucket),
-      idCol, textCol, n, k, bands, threshold, native, fast)
+      minhashBandIndex(corpus, idCol, textCol, n, k, bands, fast, maxBucket),
+      idCol, textCol, n, k, bands, threshold, fast)
 
   /** The corpus side of [[minhashPairsIncremental]] as a PERSISTABLE
     * index: banded signature rows with the occupancy cap applied at
@@ -566,11 +443,11 @@ object Dedup {
   def minhashBandIndex(
       corpus: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands, native: Boolean = true,
+      bands: Int = DefaultMinhashBands,
       fast: Boolean = false,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
     capBandBuckets(
-      minhashBanded(corpus, idCol, textCol, n, k, bands, native, fast), maxBucket)
+      minhashBanded(corpus, idCol, textCol, n, k, bands, fast), maxBucket)
 
   /** Single-column band join key `bb` = band ':' bkey — bijective with
     * (band, bkey): band is a plain integer and ':' occurs in neither
@@ -593,9 +470,9 @@ object Dedup {
       delta: DataFrame, corpusIndex: DataFrame, idCol: String, textCol: String,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
       bands: Int = DefaultMinhashBands,
-      threshold: Double = DefaultMinhashThreshold, native: Boolean = true,
+      threshold: Double = DefaultMinhashThreshold,
       fast: Boolean = false): DataFrame = {
-    val bd = minhashBanded(delta, idCol, textCol, n, k, bands, native, fast)
+    val bd = minhashBanded(delta, idCol, textCol, n, k, bands, fast)
       .select(col("doc").as("delta_id"), col("sig").as("sig_d"),
         bandKey.as("bb"))
     val withBb =
@@ -624,11 +501,11 @@ object Dedup {
       corpus: DataFrame, idCol: String, textCol: String,
       table: String, nBuckets: Int, path: Option[String] = None,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands, native: Boolean = true,
+      bands: Int = DefaultMinhashBands,
       fast: Boolean = false,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): Unit =
     graft.store.Bucketing.writeBucketed(
-      minhashBandIndex(corpus, idCol, textCol, n, k, bands, native, fast, maxBucket)
+      minhashBandIndex(corpus, idCol, textCol, n, k, bands, fast, maxBucket)
         .withColumn("bb", bandKey),
       table, "bb", nBuckets, path)
 
@@ -642,10 +519,10 @@ object Dedup {
       batch: DataFrame, idCol: String, textCol: String,
       table: String, nBuckets: Int,
       n: Int = DefaultShingleN, k: Int = DefaultMinhashK,
-      bands: Int = DefaultMinhashBands, native: Boolean = true,
+      bands: Int = DefaultMinhashBands,
       fast: Boolean = false): Unit =
     graft.store.Bucketing.appendBucketed(
-      minhashBanded(batch, idCol, textCol, n, k, bands, native, fast)
+      minhashBanded(batch, idCol, textCol, n, k, bands, fast)
         .withColumn("bb", bandKey),
       table, "bb", nBuckets)
 
@@ -713,6 +590,22 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
+  /** Edge-count bound under which [[duplicateClusters]] resolves the
+    * component labels ON THE DRIVER (union-find over the collected edge
+    * list) instead of running the distributed propagation loop —
+    * session-overridable via `spark.graft.ccDriverMaxEdges` (0 disables
+    * the driver path entirely; a value that is not a whole number
+    * throws). Near-duplicate pair graphs are overwhelmingly TINY
+    * relative to their corpus (duplicate groups of a few members),
+    * while every propagation round costs ~3 scheduled jobs
+    * plus a driver re-plan — measured at sf0.1 as ~1.5-2 s of
+    * dd_clusters' 2.5-3 s wall for a graph of a few hundred edges. The
+    * bound keeps the collect broadcast-sized (16 B/edge ⇒ ≤ ~3 MB at
+    * the default), the same scale contract as the IVF centroid /
+    * Bloom-filter driver collects; past it the loop runs unchanged. */
+  val DefaultCcDriverMaxEdges: Long = 200000L
+  private val CcDriverMaxEdgesKey = "spark.graft.ccDriverMaxEdges"
+
   /** Connected components over a near-duplicate pair graph → duplicate
     * CLUSTERS with a canonical representative (the minimum doc id in the
     * component) — what a production dedup actually keeps/drops, beyond
@@ -725,21 +618,9 @@ object Dedup {
     * structure of distributed iterative graph algorithms (GraphX's
     * connected components does the same under the hood). Near-dup
     * components are overwhelmingly tiny (duplicate groups), so rounds ≈
-    * 2-4 in practice; `maxIters` is a runaway bound, not a tuning knob. */
-  /** Edge-count bound under which [[duplicateClusters]] resolves the
-    * component labels ON THE DRIVER (union-find over the collected edge
-    * list) instead of running the distributed propagation loop —
-    * session-overridable via `spark.graft.ccDriverMaxEdges` (0 disables
-    * the driver path entirely). Near-duplicate pair graphs are
-    * overwhelmingly TINY relative to their corpus (duplicate groups of
-    * a few members), while every propagation round costs ~3 scheduled jobs
-    * plus a driver re-plan — measured at sf0.1 as ~1.5-2 s of
-    * dd_clusters' 2.5-3 s wall for a graph of a few hundred edges. The
-    * bound keeps the collect broadcast-sized (16 B/edge ⇒ ≤ ~3 MB at
-    * the default), the same scale contract as the IVF centroid /
-    * Bloom-filter driver collects; past it the loop runs unchanged. */
-  val DefaultCcDriverMaxEdges: Long = 200000L
-
+    * 2-4 in practice; `maxIters` is a runaway bound, not a tuning knob:
+    * reaching it before the labels converge throws rather than return
+    * split components. */
   def duplicateClusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
     // localCheckpoint per round, not persist: caching truncates
     // recomputation but NOT the logical plan, which otherwise grows
@@ -756,14 +637,14 @@ object Dedup {
     // resolves in one union-find pass — same converged min-label
     // components the loop computes (differential-spec'd in
     // DuplicateClustersDriverSpec), minus the O(rounds) job/
-    // checkpoint/convergence-probe cadence. Long ids only (every
-    // production caller); exotic id types keep the loop.
+    // checkpoint/convergence-probe cadence. The union-find is
+    // long-typed, so other id types take the loop.
     val spark = pairs.sparkSession
     import org.apache.spark.sql.types.LongType
-    val driverMax =
-      try spark.conf.get("spark.graft.ccDriverMaxEdges",
-        DefaultCcDriverMaxEdges.toString).toLong
-      catch { case _: NumberFormatException => DefaultCcDriverMaxEdges }
+    val driverMaxRaw = spark.conf.get(CcDriverMaxEdgesKey, DefaultCcDriverMaxEdges.toString)
+    val driverMax = driverMaxRaw.trim.toLongOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"$CcDriverMaxEdgesKey must be a whole number of edges, got '$driverMaxRaw'"))
     val longIds = edges.schema("src").dataType == LongType &&
       edges.schema("dst").dataType == LongType
     if (longIds && driverMax > 0 && edges.count() <= driverMax) {
@@ -820,6 +701,10 @@ object Dedup {
       releaseLabels = releaseNext
       iter += 1
     }
+    // an unconverged labelling splits components silently — fail instead
+    if (!converged) throw new IllegalStateException(
+      s"duplicateClusters: label propagation did not converge in $maxIters rounds " +
+        "(the pair graph's diameter is larger); raise maxIters")
     labels.select(col("doc").as("doc_id"), col("label").as("cluster_id"))
   }
 
@@ -909,64 +794,8 @@ object Dedup {
     ClusterMergeParts(mapping, nodeLab, fresh)
   }
 
-  /** Band-explode a PRECOMPUTED signature table (`idCol`, `sigCol` an
-    * equal-length bit/component array) into the family's (doc, sig,
-    * band, bkey) rows — the [[simhashBanded]] projection with the
-    * signature supplied by the caller, so non-text modalities (the
-    * perceptual image hash) ride the same candidate machinery without
-    * re-deriving it. */
-  def signatureBanded(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int): DataFrame = {
-    require(bits % bands == 0, "bands must divide bits")
-    val r = bits / bands
-    // posexplode_OUTER + null-drop: a non-outer generate feeds
-    // InferFiltersFromGenerate, and pushdown substitutes `sig`'s whole
-    // defining expression (a full signature computation) into the
-    // inferred (size > 0, isnotnull) filter — two extra signature
-    // evaluations per row (see ngramJaccardPairs). The band array is
-    // never empty (bands ≥ 1), so the filter drops nothing.
-    sigs.select(col(idCol).as("doc"), col(sigCol).as("sig"))
-      .select(col("doc"), col("sig"),
-        posexplode_outer(transform(sequence(lit(0), lit(bands - 1)), i =>
-          array_join(slice(col("sig"), i * r + 1, lit(r)).cast("array<string>"), "_")))
-          .as(Seq("band", "bkey")))
-      .filter(col("band").isNotNull)
-  }
-
-  /** Near-duplicate pairs over a precomputed signature table — the
-    * banded LSH candidate walk ([[bucketPairs]]: one bucket pass,
-    * first-colliding-band dedup, hot-bucket cap) with a caller-supplied
-    * symmetric `score`. Output (doc_a, doc_b, score). */
-  def signaturePairs(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int, score: (Column, Column) => Column,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    bucketPairs(signatureBanded(sigs, idCol, sigCol, bits, bands),
-      bits / bands, score, maxBucket)
-
-  /** A precomputed-signature corpus as a PERSISTABLE banded index
-    * ([[simhashBandIndex]]'s shape): plain columns, occupancy cap
-    * applied at build time. */
-  def signatureBandIndex(sigs: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int,
-      maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
-    capBandBuckets(signatureBanded(sigs, idCol, sigCol, bits, bands), maxBucket)
-
-  /** O(Δ) ingest against a [[signatureBandIndex]] (possibly persisted,
-    * possibly bucketed on a stored `bb`): the delta's banded signatures
-    * equi-join the index on the fused band key, per-pair collapse by
-    * max score. Output (delta_id, corpus_id, score); the caller applies
-    * its threshold direction (≥ for similarity scores, ≤ for
-    * distances — hence no filter here). */
-  def signaturePairsIncrementalFromIndex(deltaSigs: DataFrame,
-      corpusIndex: DataFrame, idCol: String, sigCol: String,
-      bits: Int, bands: Int, score: (Column, Column) => Column): DataFrame =
-    bandedIncrementalJoin(
-      signatureBanded(deltaSigs, idCol, sigCol, bits, bands),
-      corpusIndex, score)
-
-  /** The ONE copy of the banded O(Δ) ingest join all the incremental
-    * signature families share (array SimHash, precomputed signatures,
-    * packed pHash): the delta's banded rows equi-join the corpus index
+  /** The ONE copy of the banded O(Δ) ingest join the incremental
+    * packed-signature families share (SimHash, pHash): the delta's banded rows equi-join the corpus index
     * on the fused band key, self-pairs drop, per-pair collapse by max
     * score. A stored `bb` column (the bucketed layout) carries the
     * scan's partitioning into the join so the corpus side shuffles
@@ -996,13 +825,15 @@ object Dedup {
   // bit_count(a XOR b) (one instruction span vs a 63-element zip), and
   // turns band keys into shift+mask integers instead of joined strings.
   // The band-b key covers signature positions [b·r, b·r+r) — the SAME
-  // position partition as signatureBanded's array slices — so the
+  // position partition as r-wide slices of the bit array — so the
   // candidate set, survivor logic, and scores are identical bit-for-bit
   // to the array form and an oracle written against either matches.
 
-  /** [[signatureBanded]] for a signature packed into one long (`sigCol`,
-    * bit i = signature position i, `bits` ≤ 64). Output (doc, sig,
-    * band, bkey) with integer `bkey`. A full 64-bit signature may put
+  /** Band-explode a PRECOMPUTED signature packed into one long
+    * (`sigCol`, bit i = signature position i, `bits` ≤ 64) into the
+    * family's (doc, sig, band, bkey) rows, integer `bkey` — so non-text
+    * modalities (the perceptual image hash) ride the same candidate
+    * machinery as SimHash. A full 64-bit signature may put
     * bit 63 in the sign position — safe throughout: xor and bit_count
     * are sign-agnostic, and the band slice is an ARITHMETIC shift
     * masked to r bits, whose kept positions [0, r) carry the true bits
@@ -1021,9 +852,12 @@ object Dedup {
       "bands = 1 requires bits <= 63 (a 64-bit single band key would need an unmasked word)")
     val r = bits / bands
     val mask = (1L << r) - 1
-    // posexplode_OUTER + null-drop: see signatureBanded — keeps
-    // InferFiltersFromGenerate from re-evaluating the signature twice
-    // more per row; the band array is never empty.
+    // posexplode_OUTER + null-drop: a non-outer generate feeds
+    // InferFiltersFromGenerate, and pushdown substitutes `sig`'s whole
+    // defining expression (a full signature computation) into the
+    // inferred (size > 0, isnotnull) filter — two extra signature
+    // evaluations per row (see ngramJaccardPairs). The band array is
+    // never empty (bands ≥ 1), so the filter drops nothing.
     sigs.select(col(idCol).as("doc"), col(sigCol).cast("long").as("sig"))
       .select(col("doc"), col("sig"),
         posexplode_outer(transform(sequence(lit(0), lit(bands - 1)), b =>
@@ -1033,22 +867,24 @@ object Dedup {
       .filter(col("band").isNotNull)
   }
 
-  /** [[signaturePairs]] over packed signatures, Hamming-scored: the
-    * banded candidate walk ([[bucketPairs]]'s semantics — one bucket
-    * pass, first-colliding-band dedup, hot-bucket cap) with slices and
-    * score fused into long bit arithmetic. Output (doc_a, doc_b, score =
-    * Hamming distance). `maxScore` (when set) pushes the caller's
-    * `score <= maxScore` filter inside the walk so non-qualifying pairs
-    * are never materialized as rows — emitted pairs are unchanged. */
+  /** Near-duplicate pairs over packed signatures, Hamming-scored: the
+    * banded candidate walk (one bucket pass, first-colliding-band
+    * dedup, hot-bucket cap — plans.BucketPairsExpr) with slices and
+    * score fused into long bit arithmetic. Ids must be longs. Output
+    * (doc_a, doc_b, score = Hamming distance). `maxScore` (when set)
+    * pushes the caller's `score <= maxScore` filter inside the walk so
+    * non-qualifying pairs are never materialized as rows — emitted
+    * pairs are unchanged. */
   def packedSignaturePairs(sigs: DataFrame, idCol: String, sigCol: String,
       bits: Int, bands: Int,
       maxBucket: Option[Int] = Some(DefaultMaxBucket),
       maxScore: Option[Int] = None): DataFrame =
-    packedBucketPairs(packedSignatureBanded(sigs, idCol, sigCol, bits, bands),
-      bits / bands, maxBucket, maxScore)
+    bucketPairs(packedSignatureBanded(sigs, idCol, sigCol, bits, bands), maxBucket)(
+      packedPairs(_, _, bits / bands, maxBucket, maxScore))
 
-  /** [[signatureBandIndex]] over packed signatures: a persistable
-    * (doc, sig, band, bkey) index — three longs and an int per row. */
+  /** A packed-signature corpus as a PERSISTABLE banded index
+    * ([[simhashBandIndex]]'s shape): (doc, sig, band, bkey) — three
+    * longs and an int per row, occupancy cap applied at build time. */
   def packedSignatureBandIndex(sigs: DataFrame, idCol: String, sigCol: String,
       bits: Int, bands: Int,
       maxBucket: Option[Int] = Some(DefaultMaxBucket)): DataFrame =
@@ -1063,104 +899,6 @@ object Dedup {
     bandedIncrementalJoin(
       packedSignatureBanded(deltaSigs, idCol, sigCol, bits, bands),
       corpusIndex, (a, b) => bit_count(a.bitwiseXOR(b)))
-
-  /** [[bucketPairs]] specialized to packed long signatures: band slices
-    * are shift+mask, the score is bit_count(xor). Same candidate and
-    * survivor semantics (see [[bucketPairs]]'s cap scaladoc).
-    *
-    * NATIVE walk (round 18): when the banded frame carries (doc: long,
-    * sig: long) — every production caller — the in-row pair enumeration
-    * runs as the compiled `graft_packed_pairs` expression
-    * (plans.PackedBucketPairs) instead of nested Catalyst HOF lambdas:
-    * higher-order functions are not whole-stage-codegen'd, so the HOF
-    * walk paid an interpreted lambda eval + struct allocation per
-    * candidate pair (~800 ns/pair measured at sf0.1 — ≈2 s of
-    * dd_phash's 2.6-3.7 s wall on ~2.5M in-bucket pairs). Pair set,
-    * survivor/chain semantics and scores are bit-identical
-    * (differential-spec'd in BucketPairsNativeSpec; oracle-gated by the
-    * dd_phash/dd_simhash families including the cap-engaged capped
-    * gates). Exotic schemas keep the HOF walk. */
-  private def packedBucketPairs(banded: DataFrame, r: Int,
-      maxBucket: Option[Int], maxScore: Option[Int] = None): DataFrame = {
-    maxBucket.foreach(cap => require(cap >= 2, "maxBucket must be >= 2"))
-    val nativeTypes =
-      banded.schema("doc").dataType == org.apache.spark.sql.types.LongType &&
-        banded.schema("sig").dataType == org.apache.spark.sql.types.LongType
-    if (nativeTypes) {
-      graft.GraftExtensions.register(banded.sparkSession)
-      val grouped = banded.groupBy("band", "bkey")
-        .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
-        .filter(size(col("ms")) > 1)
-      return grouped
-        // outer + null-drop: an empty pair array (all pairs suppressed
-        // or thresholded) becomes one null row, dropped here — the HOF
-        // walk's explode_outer convention
-        .select(explode_outer(call_function("graft_packed_pairs",
-          col("ms"), col("band"), lit(r), lit(maxBucket.getOrElse(-1)),
-          lit(maxScore.getOrElse(-1)))).as("p"))
-        .filter(col("p").isNotNull)
-        .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-          col("p.score").as("score"))
-    }
-    val mask = (1L << r) - 1
-    def bandSlice(sig: Column, b: Column): Column =
-      call_function("shiftright", sig, (b * r).cast("int")).bitwiseAND(lit(mask))
-    def pair(x: Column, y: Column): Column = {
-      val keep = when(col("band") === 0, lit(true))
-        .otherwise(forall(
-          // sequence() steps DOWNWARD for an empty range, hence the
-          // band === 0 guard above
-          sequence(lit(0), col("band") - 1),
-          b => !(bandSlice(x.getField("sig"), b) === bandSlice(y.getField("sig"), b))))
-      struct(
-        least(x.getField("doc"), y.getField("doc")).as("doc_a"),
-        greatest(x.getField("doc"), y.getField("doc")).as("doc_b"),
-        bit_count(x.getField("sig").bitwiseXOR(y.getField("sig"))).as("score"),
-        keep.as("keep"))
-    }
-    def allPairs(ms: Column): Column =
-      flatten(transform(ms, (a, i) =>
-        transform(slice(ms, i + 2, size(ms)), b => pair(a, b))))
-    val pairsCol = maxBucket match {
-      case None => allPairs(col("ms"))
-      case Some(cap) =>
-        // struct sort = doc ascending (doc is the first field), so the
-        // survivor set and the representative are order-independent.
-        // `__mss` is a MATERIALIZED projection, not an inline
-        // array_sort: an inline `sorted` re-evaluates at every
-        // reference inside the pair-walk lambdas — a re-SORT of the
-        // whole bucket per chained element, O(m²·log m) on exactly the
-        // hot buckets the cap exists for (measured: the capped walk ran
-        // 2× the UNCAPPED walk on 2.2-2.9k-member buckets, round 16)
-        val sorted = col("__mss")
-        when(size(col("ms")) <= cap, allPairs(col("ms")))
-          .otherwise(concat(
-            allPairs(slice(sorted, 1, cap)),
-            transform(slice(sorted, lit(cap + 1), size(col("ms")) - cap),
-              x => pair(element_at(sorted, 1), x))))
-    }
-    val grouped = banded.groupBy("band", "bkey")
-      .agg(collect_list(struct(col("doc"), col("sig"))).as("ms"))
-      .filter(size(col("ms")) > 1)
-    // the sorted image is computed once per OVER-cap bucket (the when()
-    // leaves it null below the cap), so dormant-cap plans pay one size()
-    // test per bucket and results there stay bit-identical
-    val staged = maxBucket match {
-      case None => grouped
-      case Some(cap) => grouped.withColumn("__mss",
-        when(size(col("ms")) > cap, array_sort(col("ms"))))
-    }
-    staged
-      // outer + null-drop: a non-outer explode's inferred filter
-      // (InferFiltersFromGenerate) re-evaluates the whole pair-
-      // enumeration lambda twice more per bucket row (see
-      // ngramJaccardPairs); an all-suppressed bucket's empty array
-      // becomes one null row, dropped here
-      .select(explode_outer(filter(pairsCol, p => p.getField("keep"))).as("p"))
-      .filter(col("p").isNotNull)
-      .select(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"),
-        col("p.score").as("score"))
-  }
 
   // ---- MULTIPROBE over packed signatures ------------------------------
   //
@@ -1215,7 +953,7 @@ object Dedup {
   /** The probe expansion alone, over an ALREADY-banded frame. */
   private def multiprobeExpand(banded: DataFrame, r: Int, flips: Int): DataFrame = {
     val masks = typedLit(0L +: flipMasks(r, flips).toSeq)
-    // outer + null-drop (see signatureBanded); the mask array is a
+    // outer + null-drop (see packedSignatureBanded); the mask array is a
     // non-empty literal, so nothing drops
     banded
       .select(col("doc"), col("sig"), col("band"),
@@ -1352,33 +1090,24 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("score").as("hamming"))
   }
 
-  /** (doc, sig: long) packed SimHash signatures — [[simhashBits]]'s 64
-    * votes folded into one long (bit i = classic signature position i,
-    * TextFunctions.packBits). */
+  /** (doc, sig: long) packed SimHash signatures — the native
+    * [[graft.functions.TextFunctions.simhash64]], bit-identical to
+    * packBits(simhashBits(toks, 64), 64) by differential spec: the
+    * 64-vote loop compiles instead of interpreting 64 per-bit
+    * expression trees per token (profiled at ~5 s of dd_simhash's 6 s
+    * at sf0.1; the md5 calls themselves — the cross-engine-
+    * verifiability anchor — are negligible). */
   private def simhashPackedSigs(
       df: DataFrame, idCol: String, textCol: String,
-      bits: Int, minTokens: Int, native: Boolean = true): DataFrame = {
-    // native path (the minhashBanded convention): codegen'd Catalyst
-    // expression (graft.plans.SimHash64) — bit-identical to
-    // packBits(simhashBits(toks)) by differential spec, but the 64-vote
-    // loop compiles instead of interpreting 64 per-bit expression trees
-    // per token (profiled at ~5 s of dd_simhash's 6 s at sf0.1; the md5
-    // calls themselves — the cross-engine-verifiability anchor — are
-    // negligible).
-    val sigCol =
-      if (native) {
-        require(bits == 64, "graft_simhash64 packs exactly 64 bits")
-        graft.GraftExtensions.register(df.sparkSession)
-        call_function("graft_simhash64", col("toks"))
-      } else graft.functions.TextFunctions.packBits(
-        simhashBits(col("toks"), bits), bits)
+      bits: Int, minTokens: Int): DataFrame = {
+    require(bits == 64, "the native SimHash packs exactly 64 bits")
     df.select(col(idCol).as("doc"), tokens(col(textCol)).as("toks"))
       // degenerate-doc guard: tokens('') = [''] so every empty/whitespace
       // doc would share one signature, spuriously pairing at hamming 0 —
       // and at scale a mass of degenerate docs is one LSH bucket with a
       // B² pair blowup. Require ≥ minTokens non-empty tokens.
       .filter(size(array_remove(col("toks"), "")) >= minTokens)
-      .select(col("doc"), sigCol.as("sig"))
+      .select(col("doc"), simhash64(col("toks")).as("sig"))
   }
 
   /** INCREMENTAL SimHash dedup: near-duplicate (delta, corpus) pairs by

@@ -154,7 +154,6 @@ object TextAnalysis {
     * loop (plans/MaxMultiplicityExpr): the sorted-run HOF it replaces
     * interpreted ~2 node evaluations per gram per step. */
   def repetitionStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.GraftExtensions.register(df.sparkSession)
     // fused native n-gram counting (graft.plans.NGramMaxMultiplicity):
     // the former grams(·) ∘ graft_maxmult composition materialized every
     // gram as an interpreted concat_ws string — n element_at evals + one
@@ -163,8 +162,8 @@ object TextAnalysis {
     // array (equality asserted in MaxMultiplicityExprSpec)
     df.select(col(idCol), tokens(col(textCol)).as("__toks"))
       .select(col(idCol), size(col("__toks")).as("n_tokens"),
-        call_function("graft_maxmult_ngram", col("__toks"), lit(2)).as("top_bigram_count"),
-        call_function("graft_maxmult_ngram", col("__toks"), lit(3)).as("top_trigram_count"))
+        maxMultNgram(col("__toks"), 2).as("top_bigram_count"),
+        maxMultNgram(col("__toks"), 3).as("top_trigram_count"))
       .select(
         col(idCol),
         col("n_tokens").cast("long").as("n_tokens"),

@@ -8,23 +8,63 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
-/** Native banded-LSH pair walks — the compiled twins of the
-  * higher-order-function (HOF) bucket walks in `Dedup.bucketPairs` /
-  * `Dedup.packedBucketPairs`.
+/** Native banded-LSH pair walks: every member pair of one LSH bucket
+  * (the `ms` collected per (band, bkey) group), scored in-row. Built
+  * through `TextFunctions.jaccardPairs` / `TextFunctions.packedPairs`;
+  * the interpreted higher-order-function (HOF) walk they replaced lives
+  * on only as the test-scope reference model they are
+  * differential-spec'd against (BucketPairsNativeSpec), and every
+  * dd_phash/dd_simhash/dd_minhash family gate is oracle-checked.
   *
-  * Why native (the SimHash64/SpanKeys argument once more, now for the
-  * walk itself): Catalyst higher-order functions (`transform`, `filter`,
+  * Why native: Catalyst higher-order functions (`transform`, `filter`,
   * `forall`, `flatten`) are NOT whole-stage-codegen'd — every lambda
   * application is an interpreted expression eval that allocates, and the
   * pair walk applies a nested lambda PER CANDIDATE PAIR. At sf0.1 the
   * uncapped dd_phash walk enumerates ~2.5M in-bucket pairs and was
   * measured at ~800 ns/pair (≈ 2 s of the gate's 2.6-3.7 s wall); the
-  * same double loop in compiled Scala is a handful of ns/pair. Semantics
-  * are IDENTICAL to the HOF form by construction (same first-colliding-
-  * band dedup, same hot-bucket survivor+chain branch, same
-  * least/greatest direction, same scores — differential-spec'd in
-  * BucketPairsNativeSpec and oracle-gated through every dd_phash/
-  * dd_simhash/dd_minhash family gate), so plans swap freely.
+  * same double loop in compiled Scala is a handful of ns/pair.
+  *
+  * Grouping each bucket once and enumerating its pairs in-row beats the
+  * natural self-join on (band, bkey), which computes the signature plan
+  * twice (Spark cannot reuse the exchange into a broadcast build side).
+  *
+  * First colliding band. A pair colliding in SEVERAL bands must still
+  * be emitted once. Rather than a `dropDuplicates` — a second full
+  * shuffle of the candidate set, the largest intermediate in the whole
+  * dedup — each pair is kept only in its FIRST colliding band, decided
+  * in-row from the signatures both members carry: bands `0 until band`
+  * must disagree on their `r`-wide slices. Exact-once by construction,
+  * zero extra exchanges. The symmetric score is computed in-row too, so
+  * the emitted struct is (doc_a = least, doc_b = greatest, score), never
+  * the full signatures.
+  *
+  * Hot-bucket guard (`cap`). A bucket with m > cap members would
+  * otherwise materialize O(m²) candidate structs inside one aggregation
+  * row — the executor-OOM regime when a boilerplate near-dup cluster
+  * (routine in web crawls) lands in one bucket. Above the cap the
+  * bucket switches to survivor pairs + representative chains: the `cap`
+  * lowest-id members (struct sort, doc ascending — deterministic and
+  * key-stable, bucket membership alone decides) enumerate pairs
+  * exactly, and every remaining member CHAINS to the bucket
+  * representative (the min doc). Per-bucket work becomes O(cap² + m),
+  * and connectivity is preserved — every member stays linked to the
+  * rep, so `Dedup.duplicateClusters` resolves a capped cluster to
+  * exactly the same component. The price is pair-level completeness
+  * among non-survivors, the right trade in the regime that triggers it:
+  * a bucket only grows hot when near-identical documents share band
+  * slices, where chain scores match pair scores.
+  *
+  * Guard/first-band interaction, stated precisely: the first-colliding-
+  * band rule assumes that band represented the pair, so a pair of
+  * non-survivors whose first collision is a hot band exists only
+  * through that band's chains — a later COLD collision of the same pair
+  * is still suppressed. If such a pair's chain scores fall below the
+  * caller's threshold, its component can split. This requires a hot
+  * bucket whose members are NOT mutually similar — with md5-derived
+  * r-component slices that is a degenerate banding, not a boilerplate
+  * cluster — and is the irreducible approximation of bounding bucket
+  * work in-row. When NO bucket exceeds the cap (every gated fixture;
+  * BucketCapDormancySpec), results equal the unguarded walk.
   *
   * Two concrete walks (one per signature representation):
   *   - `graft_packed_pairs(ms, band, r, cap, maxScore)` over
@@ -38,10 +78,10 @@ import org.apache.spark.sql.types._
   *
   * `cap` < 0 disables the hot-bucket guard (the maxBucket = None
   * posture); `maxScore` < 0 / `minScore` < 0 disable the score
-  * threshold (then every surviving pair is emitted, exactly like the
-  * HOF walk before its downstream Filter). Thresholds only skip pairs
-  * the downstream Filter would drop anyway — pushed inside the loop so
-  * non-qualifying pairs are never materialized as rows.
+  * threshold (then every surviving pair is emitted). Thresholds only
+  * skip pairs the caller's downstream Filter would drop anyway — pushed
+  * inside the loop so non-qualifying pairs are never materialized as
+  * rows. A `doc` that is not a long fails analysis.
   */
 abstract class BucketPairsBase extends BinaryExpression {
 

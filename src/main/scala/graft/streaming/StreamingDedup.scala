@@ -23,7 +23,7 @@ import graft.operators.{Dedup, SimilaritySearch}
   * id order.
   *
   * Scale design: signatures and band keys are the SAME zero-shuffle
-  * projection as the batch path (one codegen'd `graft_minhash` call);
+  * projection as the batch path (one codegen'd native MinHash);
   * the only stateful shuffle keys on the band bucket — the minimum
   * communication for the problem, identical to the batch plan's one
   * exchange. State per bucket is the (doc_id, arrival, signature) list
@@ -67,7 +67,6 @@ object StreamingDedup {
     require(horizonMinutes >= 1)
     import spark.implicits._
     import graft.functions.TextFunctions._
-    graft.GraftExtensions.register(spark)
     val r = k / bands
     val horizonMs = horizonMinutes * 60 * 1000L
 
@@ -81,12 +80,8 @@ object StreamingDedup {
     val fpSig = array_repeat(
       conv(substring(md5(lower(trim(col("__text")))), 1, 15), 16, 10).cast("long"), k)
     val sigExpr =
-      if (!fingerprintShortDocs)
-        call_function("graft_minhash",
-          shinglesFromTokens(col("toks"), n), lit(k), lit(fast))
-      else when(isLong,
-        call_function("graft_minhash",
-          shinglesFromTokens(col("toks"), n), lit(k), lit(fast)))
+      if (!fingerprintShortDocs) minhash(shinglesFromTokens(col("toks"), n), k, fast)
+      else when(isLong, minhash(shinglesFromTokens(col("toks"), n), k, fast))
         .otherwise(fpSig)
     val bandIdx =
       if (!fingerprintShortDocs) sequence(lit(0), lit(bands - 1))
@@ -203,7 +198,6 @@ object StreamingDedup {
     require(maxBucketState >= 2, "maxBucketState must be >= 2")
     import spark.implicits._
     import graft.functions.VectorFunctions
-    graft.GraftExtensions.register(spark)
     val horizonMs = horizonMinutes * 60 * 1000L
 
     val bucketCols = SimilaritySearch.lshBucketCols(dim, nBits, nTables)
@@ -349,9 +343,9 @@ object StreamingDedup {
       maxBucketState: Int = Dedup.DefaultMaxBucket): DataFrame = {
     import graft.functions.TextFunctions
     require(horizonMinutes >= 1)
+    require(bits == 64, "the native SimHash packs exactly 64 bits")
     require(bits % bands == 0 && bands >= 2, "bands must divide bits, >= 2")
     require(maxBucketState >= 2, "maxBucketState must be >= 2")
-    graft.GraftExtensions.register(spark)
     import spark.implicits._
     val horizonMs = horizonMinutes * 60 * 1000L
     val banded = docs
@@ -359,14 +353,9 @@ object StreamingDedup {
         to_timestamp(col(timeCol)).as("event_time"),
         TextFunctions.tokens(col(textCol)).as("__t"))
       .filter(size(array_remove(col("__t"), "")) >= minTokens)
-      .select(col("doc_id"), col("event_time"), {
-        // the batch side's native signature (graft.plans.SimHash64 —
-        // registered above by this method's GraftExtensions.register):
-        // bit-identical to packBits(simhashBits(·)), codegen'd
-        if (bits == 64) call_function("graft_simhash64", col("__t"))
-        else TextFunctions.packBits(
-          TextFunctions.simhashBits(col("__t"), bits), bits)
-      }.as("sig"))
+      // the batch side's native signature, bit-identical to
+      // packBits(simhashBits(·)), codegen'd
+      .select(col("doc_id"), col("event_time"), TextFunctions.simhash64(col("__t")).as("sig"))
       .withWatermark("event_time", s"$horizonMinutes minutes")
       .select(col("doc_id"), col("event_time"), col("sig"),
         packedBandKeys(col("sig"), bands, bits / bands).as("bkey"))

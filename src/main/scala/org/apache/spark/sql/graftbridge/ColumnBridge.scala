@@ -9,9 +9,9 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * the session FunctionRegistry — the standard extension-library
   * technique (Delta/Frameless do the same) for Spark 4's sql-api
   * `Column`, whose Expression constructor moved behind
-  * `classic.ExpressionUtils`. Used by the graft function builders so
-  * native expressions work on sessions that never called
-  * `GraftExtensions.register`. */
+  * `classic.ExpressionUtils`. The one way the library builds a native
+  * expression: every typed builder in `graft.functions` goes through
+  * here, so no operator needs a registered SQL function. */
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)

@@ -55,18 +55,17 @@ class DedupSpec extends SparkSpecBase {
     //    and the native codegen'd expression (graft.plans.SimHash64 — the
     //    production signature since round 14) equals the composed form
     //    bit-for-bit on every document
-    graft.GraftExtensions.register(spark)
     docs
       .select(col("doc_id").as("doc"), TextFunctions.tokens(col("text")).as("toks"))
       .filter(size(array_remove(col("toks"), "")) >= 1)
       .select(col("doc"),
         TextFunctions.simhashBits(col("toks"), 64).as("sig"),
         TextFunctions.packBits(TextFunctions.simhashBits(col("toks"), 64), 64).as("packed"),
-        call_function("graft_simhash64", col("toks")).as("native"))
+        TextFunctions.simhash64(col("toks")).as("native"))
       .collect().foreach { r =>
         val arr = r.getSeq[Int](1); val p = r.getLong(2); val nv = r.getLong(3)
         assert(nv == p,
-          s"doc ${r.getLong(0)}: native graft_simhash64 diverges from packBits∘simhashBits")
+          s"doc ${r.getLong(0)}: native simhash64 diverges from packBits∘simhashBits")
         (0 until 64).foreach { i =>
           assert(((p >>> i) & 1L).toInt == arr(i),
             s"doc ${r.getLong(0)}: bit $i diverges between packed and array")
@@ -74,7 +73,7 @@ class DedupSpec extends SparkSpecBase {
       }
     // 2. the packed bucket walk = the array bucket walk (same bands,
     //    same cap, same first-colliding-band dedup), scores included
-    val ref = Dedup.signaturePairs(
+    val ref = graft.HofReference.signaturePairs(
       arraySigs, "doc", "sig", 64, Dedup.DefaultSimhashBands,
       TextFunctions.hamming)
       .filter(col("score") <= Dedup.DefaultMaxHamming)

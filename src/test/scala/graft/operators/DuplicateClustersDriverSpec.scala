@@ -57,14 +57,36 @@ class DuplicateClustersDriverSpec extends SparkSpecBase {
   test("chain labels collapse to the component minimum") {
     import spark.implicits._
     // one 20-node chain: the deepest shape inside the loop's maxIters
-    // runaway bound (25 rounds) — past that bound the LOOP returns
-    // unconverged labels (and would fail its own recursive oracle)
-    // while the driver union-find is converged by construction, so the
-    // differential contract only holds in the loop's converged regime
+    // runaway bound (25 rounds)
     val pairs = (0 until 19).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
     val (d, l) = both(pairs)
     assert(d === l)
     assert(d.forall(_._2 == 0L))
     assert(d.map(_._1) === (0L until 20L).toSet)
+    // a 60-node chain needs ~60 propagation rounds: past the default
+    // bound the loop throws instead of returning split components, and
+    // with the bound raised it matches the driver union-find
+    val chain60 = (0 until 59).map(i => (i.toLong, i + 1L)).toDF("doc_a", "doc_b")
+    spark.conf.unset("spark.graft.ccDriverMaxEdges")
+    val driver60 = canon(Dedup.duplicateClusters(chain60))
+    assert(driver60 === (0L until 60L).map(i => (i, 0L)).toSet)
+    spark.conf.set("spark.graft.ccDriverMaxEdges", "0")
+    try {
+      val e = intercept[IllegalStateException](Dedup.duplicateClusters(chain60))
+      assert(e.getMessage.contains("25 rounds") && e.getMessage.contains("maxIters"),
+        e.getMessage)
+      assert(canon(Dedup.duplicateClusters(chain60, maxIters = 64)) === driver60)
+    } finally spark.conf.unset("spark.graft.ccDriverMaxEdges")
+  }
+
+  test("a malformed ccDriverMaxEdges fails, naming the key and the value") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L)).toDF("doc_a", "doc_b")
+    spark.conf.set("spark.graft.ccDriverMaxEdges", "200k")
+    try {
+      val e = intercept[IllegalArgumentException](Dedup.duplicateClusters(pairs))
+      assert(e.getMessage.contains("spark.graft.ccDriverMaxEdges") &&
+        e.getMessage.contains("200k"), e.getMessage)
+    } finally spark.conf.unset("spark.graft.ccDriverMaxEdges")
   }
 }

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.functions._
 
-import graft.{GraftExtensions, SparkSpecBase}
+import graft.{GraftExtensions, HofReference, SparkSpecBase}
 import graft.functions.TextFunctions
 import graft.operators.Dedup
 import graft.sources.Tables
@@ -10,22 +10,20 @@ import graft.sources.Tables
 class MinHashSignatureExprSpec extends SparkSpecBase {
 
   test("native expression is bit-identical to the HOF formulation") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("toks"), 3).as("sh"))
     val both = docs.select(
       col("doc_id"),
-      TextFunctions.minhashSignature(col("sh"), 64).as("hof"),
-      call_function("graft_minhash", col("sh"), lit(64)).as("native"))
+      HofReference.minhashSignature(col("sh"), 64).as("hof"),
+      TextFunctions.minhash(col("sh"), 64).as("native"))
     val mismatches = both.filter(col("hof") =!= col("native")).count()
     assert(mismatches === 0)
   }
 
   test("native expression participates in codegen (no fallback)") {
-    GraftExtensions.register(spark)
     val plan = Tables.documents(spark, sfDir)
-      .select(call_function("graft_minhash", split(col("text"), " "), lit(16)))
+      .select(TextFunctions.minhash(split(col("text"), " "), 16))
       .queryExecution.executedPlan.toString
     // the "*(n)" prefix marks operators inside a WholeStageCodegen stage
     assert(plan.contains("*(1) Project [graft_minhash"), plan)
@@ -33,25 +31,25 @@ class MinHashSignatureExprSpec extends SparkSpecBase {
 
   test("minhashPairs native and HOF paths agree end-to-end") {
     val docs = Tables.documents(spark, sfDir)
-    val nat = Dedup.minhashPairs(docs, "doc_id", "text", native = true)
+    val nat = Dedup.minhashPairs(docs, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val hof = Dedup.minhashPairs(docs, "doc_id", "text", native = false)
+    val hof = HofReference.minhashPairs(docs, "doc_id", "text",
+      maxBucket = Some(Dedup.DefaultMaxBucket))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(nat === hof)
     assert(nat.nonEmpty)
   }
 
   test("fast (xxhash64) mode: native and HOF agree bit-for-bit; md5 default untouched") {
-    GraftExtensions.register(spark)
     val docs = Tables.documents(spark, sfDir)
       .select(col("doc_id"), TextFunctions.tokens(col("text")).as("toks"))
       .select(col("doc_id"), TextFunctions.shinglesFromTokens(col("toks"), 3).as("sh"))
       .filter(size(col("sh")) > 0)
     val both = docs.select(
-      TextFunctions.minhashSignature(col("sh"), 64, fast = true).as("hof_xx"),
-      call_function("graft_minhash", col("sh"), lit(64), lit(true)).as("native_xx"),
-      TextFunctions.minhashSignature(col("sh"), 64).as("hof_md5"),
-      call_function("graft_minhash", col("sh"), lit(64)).as("native_md5"))
+      HofReference.minhashSignature(col("sh"), 64, fast = true).as("hof_xx"),
+      TextFunctions.minhash(col("sh"), 64, fast = true).as("native_xx"),
+      HofReference.minhashSignature(col("sh"), 64).as("hof_md5"),
+      TextFunctions.minhash(col("sh"), 64).as("native_md5"))
     assert(both.filter(col("hof_xx") =!= col("native_xx")).count() === 0)
     assert(both.filter(col("hof_md5") =!= col("native_md5")).count() === 0)
     // and fast mode is a genuinely different hash family, not a no-op
